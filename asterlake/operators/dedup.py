@@ -32,10 +32,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def word_tokens(text_col: str) -> Column:
-    return F.split(F.col(text_col), " ")
-
-
 def word_shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles, empty array when the doc is shorter
     than n tokens (guards Spark's descending sequence() on stop < start).

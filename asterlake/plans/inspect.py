@@ -111,10 +111,3 @@ def shuffle_keys(plan: str) -> list[str]:
         m.group(1)
         for m in re.finditer(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
     ]
-
-
-def codegen_span_count(plan: str) -> int:
-    """Distinct whole-stage-codegen regions (wider spans = fewer
-    interpreted boundaries)."""
-    ids = set(re.findall(r"codegen id : (\d+)", plan))
-    return len(ids)

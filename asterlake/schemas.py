@@ -135,9 +135,51 @@ SILVER_SCHEMA = T.StructType(
     ]
 )
 
-GOLD_TABLES = (
-    "dim_asteroid",
-    "dim_date",
-    "dim_celestial_body",
-    "fact_asteroid_approach",
+# Gold star (operators/star.py; FIXTURES.md A3). Declared so the catalog
+# binds each table directory without a footer-reading job.
+# dim_asteroid carries silver's 11 descriptive asteroid columns unchanged.
+DIM_ASTEROID_SCHEMA = T.StructType(SILVER_SCHEMA.fields[:11])
+
+DIM_DATE_SCHEMA = T.StructType(
+    [
+        T.StructField("date_id", T.IntegerType()),  # yyyyMMdd smart key
+        T.StructField("approach_date", T.DateType()),
+        T.StructField("year", T.IntegerType()),
+        T.StructField("month", T.IntegerType()),
+        T.StructField("day", T.IntegerType()),
+        T.StructField("weekday", T.StringType()),
+    ]
 )
+
+DIM_CELESTIAL_BODY_SCHEMA = T.StructType(
+    [
+        T.StructField("celestial_body_id", T.LongType()),
+        T.StructField("approaching_body", T.StringType()),
+    ]
+)
+
+FACT_ASTEROID_APPROACH_SCHEMA = T.StructType(
+    [
+        T.StructField("approach_event_id", T.LongType()),
+        T.StructField("asteroid_id", T.StringType()),
+        T.StructField("date_id", T.IntegerType()),
+        T.StructField("celestial_body_id", T.LongType()),
+        T.StructField("approach_datetime", T.TimestampType()),
+        T.StructField("velocity_km_s", T.DoubleType()),
+        T.StructField("velocity_km_h", T.DoubleType()),
+        T.StructField("miss_distance_km", T.DoubleType()),
+        T.StructField("miss_distance_au", T.DoubleType()),
+        T.StructField("miss_distance_lunar", T.DoubleType()),
+        T.StructField("_etl_batch_id", T.LongType()),
+        T.StructField("_processing_timestamp", T.TimestampType()),
+    ]
+)
+
+GOLD_SCHEMAS = {
+    "dim_asteroid": DIM_ASTEROID_SCHEMA,
+    "dim_date": DIM_DATE_SCHEMA,
+    "dim_celestial_body": DIM_CELESTIAL_BODY_SCHEMA,
+    "fact_asteroid_approach": FACT_ASTEROID_APPROACH_SCHEMA,
+}
+
+GOLD_TABLES = tuple(GOLD_SCHEMAS)

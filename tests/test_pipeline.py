@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 
 from asterlake import catalog, pipeline
+from asterlake.schemas import GOLD_TABLES
 from asterlake.sources.bronze import write_bronze_document
 from asterlake.sources.neows import date_windows, fetch_feed, ingest_range
 from tests.fixtures_neows import N_ASTEROID_ROWS, N_DISTINCT_ASTEROIDS, feed_document
@@ -220,3 +221,104 @@ def test_neows_streaming_datasource_offline(spark, tmp_path):
 
     docs = [_json.loads(r.document) for r in rows]
     assert all(d == feed_document() for d in docs)
+
+
+def _empty_document() -> dict:
+    return {
+        "element_count": 0,
+        "links": {"next": "n", "prev": "p", "self": "s"},
+        "near_earth_objects": {},
+    }
+
+
+def _jobs_in_group(spark, group: str, fn) -> tuple[object, set[int]]:
+    """Run fn under a fresh job group; return its result and the ids of
+    every job the group owns, failing if fn launched any job outside it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the tracker retains a bounded job list, so look only for new ids
+    escaped = set(tracker.getJobIdsForGroup()) - ungrouped
+    assert not escaped, f"jobs {escaped} ran outside the job group"
+    return result, set(tracker.getJobIdsForGroup(group))
+
+
+def test_counts_over_appended_days_and_an_empty_day(spark, tmp_path):
+    """Each day's dict: that day's silver rows, and every gold table's
+    cumulative rows as read back from its directory. A day with no
+    asteroids returns silver 0 instead of blocking on the observed count."""
+    import threading
+
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    days = [
+        ("2025-10-10", feed_document(), N_ASTEROID_ROWS),
+        ("2025-10-11", feed_document(), N_ASTEROID_ROWS),
+        ("2025-10-12", _empty_document(), 0),
+    ]
+    for i, (day, doc, silver_rows) in enumerate(days):
+        bronze = str(tmp_path / f"bronze{i}")
+        write_bronze_document(bronze, day, doc)
+        when = dt.datetime.fromisoformat(day).replace(hour=1, minute=30)
+        result = {}
+        worker = threading.Thread(
+            target=lambda: result.update(
+                pipeline.run(spark, bronze, silver, gold, batch_id=i, processing_time=when)
+            ),
+            daemon=True,
+        )
+        worker.start()
+        worker.join(300)
+        assert not worker.is_alive(), f"pipeline.run blocked on {day}"
+        want = {"silver": silver_rows}
+        for t in GOLD_TABLES:
+            want[t] = spark.read.parquet(str(tmp_path / "gold" / t)).count()
+        assert result == want, day
+    assert result["fact_asteroid_approach"] == 2 * N_ASTEROID_ROWS
+
+
+def test_read_silver_schema_is_unchanged(lake, spark):
+    # the declared read keeps the names, types and order an inferring read
+    # of the same files gives (the partition column last)
+    from asterlake.sources.writers import read_silver
+
+    root, _ = lake
+    path = str(root / "silver")
+    got = [(f.name, f.dataType) for f in read_silver(spark, path).schema.fields]
+    want = [(f.name, f.dataType) for f in spark.read.parquet(path).schema.fields]
+    assert got == want
+
+
+def test_register_gold_launches_no_job(lake, spark):
+    root, _ = lake
+    registered, jobs = _jobs_in_group(
+        spark, "register-gold", lambda: catalog.register_gold(spark, str(root / "gold"))
+    )
+    assert registered == list(GOLD_TABLES)
+    assert jobs == set()
+
+
+def test_write_gold_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    from asterlake.sources.writers import write_gold
+
+    tables = {
+        "a": spark.range(10),
+        "b": spark.range(20).selectExpr("id % 3 AS k").distinct(),
+        "c": spark.range(5),
+    }
+    _, jobs = _jobs_in_group(spark, "g", lambda: write_gold(tables, str(tmp_path)))
+    assert len(jobs) >= len(tables)
+    for name, df in tables.items():
+        assert spark.read.parquet(str(tmp_path / name)).count() == df.count()
+
+
+def test_write_gold_raises_when_one_write_fails(spark, tmp_path):
+    from asterlake.sources.writers import write_gold
+
+    (tmp_path / "b").write_text("a regular file where a table directory goes")
+    with pytest.raises(Exception):
+        write_gold({"a": spark.range(3), "b": spark.range(3)}, str(tmp_path))

@@ -5,8 +5,9 @@ Invariants (SURVEY.md §5 "property-ish invariants"):
 - flatten grain: default = one row per (feed-date, asteroid);
   all_approaches = one row per approach, min one per asteroid
 - tolerant casts: junk numerics null out, never raise
-- dims unique on natural key; fact row count == silver row count
-  (left joins never drop); every fact date FK resolves or is null
+- dims unique on natural key; fact row count == silver row count;
+  every fact date/body FK is null iff its natural key is, and resolves
+  in its dim otherwise
 
 Spark round-trips per example are expensive: examples are few but each is
 a structurally random document (duplicate ids, empty approach lists,
@@ -128,7 +129,7 @@ def test_star_invariants(spark, doc):
     star = build_star(silver)
 
     n_silver = silver.count()
-    assert star["fact_asteroid_approach"].count() == n_silver  # J-left never drops
+    assert star["fact_asteroid_approach"].count() == n_silver  # one fact row per silver row
 
     dim_a = star["dim_asteroid"]
     assert dim_a.count() == dim_a.select("asteroid_id").distinct().count()
@@ -141,6 +142,24 @@ def test_star_invariants(spark, doc):
     unresolved = (
         fact.filter(F.col("date_id").isNotNull())
         .join(dim_d, "date_id", "left_anti")
+        .count()
+    )
+    assert unresolved == 0
+
+    # the fact's keys are null exactly when their natural key is, and every
+    # non-null body key resolves in dim_celestial_body
+    keys = fact.select(
+        F.col("date_id").isNull().alias("no_date"),
+        F.col("celestial_body_id").isNull().alias("no_body"),
+    ).collect()
+    natural = silver.select(
+        F.col("approach_date").isNull().alias("no_date"),
+        F.col("approaching_body").isNull().alias("no_body"),
+    ).collect()
+    assert keys == natural  # a projection of silver: same rows, same order
+    unresolved = (
+        fact.filter(F.col("celestial_body_id").isNotNull())
+        .join(star["dim_celestial_body"], "celestial_body_id", "left_anti")
         .count()
     )
     assert unresolved == 0

@@ -9,6 +9,7 @@ import pytest
 
 from asterlake.operators.flatten import flatten_feed
 from asterlake.operators.star import build_star
+from asterlake.schemas import GOLD_SCHEMAS, GOLD_TABLES
 from asterlake.sources.bronze import read_bronze, write_bronze_document
 from tests.fixtures_neows import N_ASTEROID_ROWS, N_DISTINCT_ASTEROIDS, feed_document
 
@@ -81,7 +82,31 @@ def test_fact_event_ids_unique_and_deterministic(star):
     )
 
 
-def test_fact_joins_are_broadcast(star):
+def test_fact_plan_has_no_exchange_or_join(star):
+    # the fact derives its dim keys from its own row: a projection of
+    # silver, with nothing to shuffle, broadcast or join
     plan = star["fact_asteroid_approach"]._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+
+
+def test_fact_keys_equal_the_dim_joins(star):
+    # the keys the reference's left joins to the dims would return
+    fact, silver = star["fact_asteroid_approach"], star["silver"]
+    joined = (
+        silver.join(star["dim_date"].select("approach_date", "date_id"), "approach_date", "left")
+        .join(star["dim_celestial_body"], "approaching_body", "left")
+    )
+    cols = ["asteroid_id", "approach_datetime", "date_id", "celestial_body_id"]
+    assert sorted(map(tuple, fact.select(cols).collect()), key=repr) == sorted(
+        map(tuple, joined.select(cols).collect()), key=repr
+    )
+
+
+@pytest.mark.parametrize("name", GOLD_TABLES)
+def test_gold_schema_matches_declared(star, name):
+    # names + types of each built table equal its declared gold schema,
+    # which the catalog binds the written directory with
+    got = [(f.name, f.dataType) for f in star[name].schema.fields]
+    want = [(f.name, f.dataType) for f in GOLD_SCHEMAS[name].fields]
+    assert got == want
