@@ -1,58 +1,120 @@
-"""Connected components over candidate-pair edges (duplicate clustering).
+"""Graph operators over DataFrame edge lists: connected components
+(duplicate clustering), PageRank, triangle counts, label propagation,
+k-core and multi-source BFS.
 
-Every dedup family in this engine (exact digests, MinHash/SimHash LSH,
-n-gram Jaccard — operators/dedup.py) stops at *pairs*. A training-data
-pipeline needs the transitive closure: if A~B and B~C, all three are one
-duplicate *cluster* and one survivor should represent it. That closure is
-connected components — the canonical iterative algorithm Spark has no
-built-in operator for (GraphFrames is an external package), so it is
-implemented here as a driver-coordinated fixpoint of DataFrame joins.
+Spark has no built-in graph operators (GraphFrames is an external
+package), so each iterative algorithm is a driver-coordinated fixpoint of
+DataFrame joins. Every such loop is one ``step`` function (one round's
+plan, no actions) run by the shared driver :func:`_iterate`:
 
-Algorithm: min-label propagation. Every vertex starts labeled with its own
-id; each round every vertex takes the min of its label and its neighbors'
-labels; converged when no label changes. Rounds = graph diameter.
+- Landing: ``localCheckpoint`` truncates lineage — without it the plan
+  doubles per round and round k replays rounds 1..k-1. A fixed-round loop
+  lands every ``_LAND_EVERY`` rounds and always its final round; the
+  un-landed rounds run inside the next landing job, their repeated
+  subtrees deduplicated through ReusedExchange. A convergence-gated loop
+  lands the round before its first probe and every probed round (the
+  probe is an action over both the previous and the new state), and
+  stops at the first round its ``converged`` test holds. Running out of
+  rounds warns.
+- Partitions: every loop runs under :func:`_pinned_partitions`, which
+  sets ``spark.sql.shuffle.partitions`` for the loop and restores it
+  afterwards; the final round lands inside it, so no round executes at
+  the ambient count. Graph loops are small relative to the corpus scans
+  the session conf is tuned for, and at the ambient count each round
+  pays that many tasks per stage. The pin is a session-global conf
+  change: the loop assumes no other query plans on the session
+  concurrently.
 
-Scale (100 TB corpus, billions of candidate edges):
-
-- Each round is ONE shuffle join (labels ⋈ edges on the vertex id) + ONE
-  partial-aggregated groupBy min — both key-partitioned on the vertex id,
-  so AQE coalesces/splits per-round. Nothing driver-side except the
-  convergence counter (a count() action per round — the unavoidable
-  driver decision every iterative dataflow makes, same as GraphFrames/
-  GraphX supersteps).
-- Lineage is truncated every round with ``localCheckpoint`` — without it
-  the plan doubles per iteration and round k replays rounds 1..k-1.
-- Diameter bound: duplicate-cluster graphs are near-cliques (every member
-  pairs with most others), so propagation converges in 2-3 rounds
-  regardless of corpus size. For adversarial long-path graphs pass
-  ``method="star"``: the alternating large-star/small-star algorithm
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SOCC'14) converges in O(log^2 n) rounds independent of diameter. Both
-  methods are exact; propagation stays the default because a dedup
-  round is one join + one partial-agg min (star rounds are two
-  grouped emissions + a distinct), and near-clique inputs finish in
-  fewer total shuffles.
+Per-round joins carry a ``shuffle_hash`` hint where the node-sized table
+would otherwise be broadcast-converted by AQE every round (a driver
+collect + broadcast build per round at bench scale, and impossible at
+100 TB); ``localCheckpoint`` does not preserve output partitioning under
+AQE, so landed inputs are not pre-partitioned.
 """
 
 from __future__ import annotations
 
 import warnings
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# Fixed-round loops land every this many rounds (plus the final round).
+_LAND_EVERY = 3
+
+# Per-node H-index over a (value h, count c) histogram: sorted by value
+# descending, the running count tracks max(min(h, cum)), which equals the
+# H-index at distinct-value boundaries. One JVM-side fold, no window.
+_HINDEX = (
+    "aggregate(sort_array(collect_list(struct(h, c)), false), "
+    "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
+    "(acc, x) -> struct(acc.cum + x.c, "
+    "greatest(acc.best, least(x.h, acc.cum + x.c))), "
+    "acc -> acc.best)"
+)
+
+
+_Probe = Callable[[DataFrame, DataFrame], bool]
+
+
+def _iterate(
+    step: Callable[[DataFrame], DataFrame], state: DataFrame, rounds: int,
+    converged: _Probe | None = None, min_rounds: int = 1, name: str = "loop",
+) -> tuple[DataFrame, int]:
+    """Run ``state = step(state)`` for at most ``rounds`` rounds; return
+    ``(state, rounds_run)``.
+
+    Without ``converged`` exactly ``rounds`` rounds run. With it, rounds
+    from ``min_rounds`` on are probed with ``converged(prev, new)`` and
+    the loop stops at the first true probe; ``rounds_run`` counts that
+    round. A gated loop that runs out of rounds warns once.
+
+    Landing rule (one for every loop): a round lands when it is a
+    multiple of ``_LAND_EVERY``, the last round before the first probe
+    (for a fixed-round loop: the final round), or a probed round.
+    """
+    first_probe = rounds + 1 if converged is None else min(min_rounds, rounds + 1)
+    for r in range(1, rounds + 1):
+        new = step(state)
+        if r % _LAND_EVERY == 0 or r >= first_probe - 1:
+            new = new.localCheckpoint()
+        if r >= first_probe and converged(state, new):
+            return new, r
+        state = new
+    if converged is not None:
+        warnings.warn(
+            f"{name}: max_iter={rounds} reached WITHOUT converging; the "
+            "result is the last round's state, not the fixpoint. Raise "
+            "the round limit.",
+            stacklevel=3,
+        )
+    return state, rounds
+
+
+@contextmanager
+def _pinned_partitions(spark: SparkSession, parts: int) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` to ``parts`` for the block and
+    restore the session's value afterwards, also when the block raises."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(parts))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _loop_parts(spark: SparkSession) -> int:
+    """The shuffle-partition count a graph loop runs at."""
+    return max(4, min(256, spark.sparkContext.defaultParallelism))
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Both directions of every edge in ONE pass over the input (r15).
-
-    The former ``select(s,d) unionByName select(d,s)`` executed the
-    caller's edge-GENERATION subtree once per union branch —
-    ReuseExchange dedups only up to the last exchange, so everything
-    above it (the co-purchase pair expansion, the n-gram Jaccard join
-    + filter of the dedup closure, ...) ran twice.
-    ``explode(array(struct(s,d), struct(d,s)))`` emits exactly the same
-    multiset from a single pass (guide §2.4: don't recompute what one
-    scan can emit)."""
+    """Both directions ``(_s, _d)`` of every edge, emitted from ONE pass
+    over the input: a union of two swapped selects would run the
+    caller's edge-generation subtree once per branch."""
     return edges.select(
         F.explode(
             F.array(
@@ -63,17 +125,31 @@ def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
     ).select("_e._s", "_e._d")
 
 
-def _warn_not_converged(method: str, max_iter: int) -> None:
-    """Round-3 advice: exhausting max_iter without reaching the fixpoint
-    means labels can silently span a component not fully merged (e.g. a
-    chain longer than max_iter under propagation). Loud, not silent."""
-    warnings.warn(
-        f"connected_components({method=}) stopped at max_iter={max_iter} "
-        "WITHOUT converging — component labels may be incomplete. Raise "
-        "max_iter (propagation needs >= graph diameter rounds; star needs "
-        "O(log^2 n)) or switch method='star' for long chains.",
-        RuntimeWarning,
-        stacklevel=3,
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The landed simple undirected graph: both directions, no
+    self-loops, no repeated edges."""
+    return (
+        _symmetrized(edges, src, dst)
+        .filter(F.col("_s") != F.col("_d"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _neighbor_counts(
+    und: DataFrame, state: DataFrame, col: str, parts: int
+) -> DataFrame:
+    """``(node, col, c)``: how many of each node's neighbors hold each
+    value of ``state``'s ``col``. One shuffle-hash join; the count's
+    node-keyed exchange also satisfies the per-node aggregate a caller
+    stacks on it (hash(node) clusters (node, col))."""
+    msgs = und.join(
+        state.withColumnRenamed("node", "_s").hint("shuffle_hash"), "_s"
+    ).select(F.col("_d").alias("node"), col)
+    return (
+        msgs.repartition(parts, "node")
+        .groupBy("node", col)
+        .agg(F.count("*").cast("bigint").alias("c"))
     )
 
 
@@ -84,7 +160,6 @@ def connected_components(
     dst: str = "dst",
     id_col: str = "id",
     max_iter: int = 25,
-    method: str = "propagation",
 ) -> DataFrame:
     """Label every vertex with the min vertex id reachable from it.
 
@@ -93,164 +168,59 @@ def connected_components(
     isolated vertices (no edges) appear as their own singleton components;
     otherwise the vertex set is inferred from the edges alone.
 
-    ``method``: ``"propagation"`` (default, rounds = diameter — right for
-    near-clique dedup graphs) or ``"star"`` (large-star/small-star,
-    O(log^2 n) rounds — right for adversarial long chains).
+    Min-label propagation: each round every vertex takes the min of its
+    label and its neighbors' labels, until no label changes — rounds =
+    graph diameter, which is 2-3 for near-clique duplicate clusters. A
+    graph deeper than ``max_iter`` warns and returns partial labels.
+    Each round is one join + one partial-aggregated min; the changed
+    count rides the round's landing job as an ``Observation``. The loop
+    pins shuffle partitions to a count derived from the edge count.
 
-    Returns ``(id_col, component)`` with component = min id in the
-    component. Deterministic for any input partitioning; both methods
-    produce identical output.
+    Returns ``(id_col, component)``. Deterministic for any input
+    partitioning.
     """
-    und = _symmetrized(edges, src, dst)
+    und = _symmetrized(edges, src, dst).localCheckpoint()
     if vertices is None:
         vertices = und.select(F.col("_s").alias(id_col)).distinct()
-    if method == "star":
-        return _cc_star(und, vertices, id_col, max_iter)
-    if method != "propagation":
-        raise ValueError(f"unknown method {method!r}")
+    parts = max(4, min(256, und.count() // 50_000 + 4))
+    labels = vertices.select(
+        F.col(id_col), F.col(id_col).alias("component")
+    ).localCheckpoint()
+    observed: list[Observation] = []
 
-    # Pin both iteration inputs (landing zones) and size the loop's
-    # shuffle-partition conf to the edge count, independent of the
-    # session conf: the dup-candidate graph is tiny relative to the
-    # corpus, and without the loop-scoped `parts` each round pays
-    # (conf partitions x stages) of task overhead in sessions tuned for
-    # the full-corpus scans. r14: the former repartition(parts, key) +
-    # SECOND localCheckpoint on each input is gone — localCheckpoint
-    # does not preserve outputPartitioning under AQE (the checkpointed
-    # scan reports UnknownPartitioning and every per-round join
-    # re-exchanges its inputs regardless, measured in the r14 plan
-    # capture), so those repartitions bought nothing and cost one full
-    # extra landing job + exchange per input. Values are partitioning-
-    # independent either way.
-    und = und.localCheckpoint()
-    n_edges = und.count()
-    parts = max(4, min(256, n_edges // 50_000 + 4))
-    labels = (
-        vertices.select(F.col(id_col), F.col(id_col).alias("component"))
-        .localCheckpoint()
-    )
-
-    spark = edges.sparkSession
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
-        for _ in range(max_iter):
-            # each vertex's best neighbor label this round; the groupBy is
-            # the round's single exchange (at `parts`, matching the pinned
-            # inputs, so both joins are co-partitioned)
-            nbr_min = (
-                und.join(labels, und["_d"] == labels[id_col])
-                .groupBy("_s")
-                .agg(F.min("component").alias("_nbr"))
-            )
-            # the convergence check RIDES the checkpoint job via an
-            # Observation (the versioned.py write-action pattern): one
-            # job per round instead of checkpoint + a second changed-
-            # count job — iteration overhead is the dominant cost of
-            # this loop on dedup-sized graphs (r11; measured ~2 jobs ->
-            # 1 per round across the whole closure family)
-            obs = Observation()
-            labels = (
-                labels.join(nbr_min, labels[id_col] == nbr_min["_s"], "left")
-                .select(
-                    F.col(id_col),
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("_nbr"), F.col("component")),
-                    ).alias("component"),
-                    (
-                        F.coalesce(F.col("_nbr"), F.col("component"))
-                        < F.col("component")
-                    ).alias("_changed"),
-                )
-                .observe(
-                    obs,
-                    F.coalesce(
-                        F.sum(F.col("_changed").cast("long")), F.lit(0)
-                    ).alias("n_changed"),
-                )
-                .drop("_changed")
-                .localCheckpoint()
-            )
-            if obs.get["n_changed"] == 0:
-                break
-        else:
-            _warn_not_converged("propagation", max_iter)
-    finally:
-        spark.conf.set(sp_key, prev_sp)
-    return labels
-
-
-def _cc_star(und: DataFrame, vertices: DataFrame, id_col: str, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. SOCC'14).
-
-    Works on a canonical directed edge set ``(_c, _p)`` with ``_c > _p``
-    (child points at the smaller endpoint). Each round:
-
-    - large-star: per node u over its full neighborhood, attach every
-      neighbor LARGER than u to min(neighborhood + u) — long chains halve.
-    - small-star: per node u over its smaller-or-equal neighbors, attach
-      all of them (and u) to the minimum — flattens local stars.
-
-    Both are one groupBy(min) + one re-emission join, key-partitioned on
-    the node id; the edge set never grows beyond the input size (emissions
-    are distinct-ed per round). Converged when a round changes nothing —
-    the edge set is then exactly (vertex -> its component min). O(log^2 n)
-    rounds for any graph, independent of diameter.
-    """
-    # canonical child>parent pairs; self-loops dropped
-    star = (
-        und.filter(F.col("_s") != F.col("_d"))
-        .select(
-            F.greatest("_s", "_d").alias("_c"), F.least("_s", "_d").alias("_p")
+    def step(labels: DataFrame) -> DataFrame:
+        nbr_min = (
+            und.join(labels, und["_d"] == labels[id_col])
+            .groupBy("_s")
+            .agg(F.min("component").alias("_nbr"))
         )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        nbrs = e.select("_c", "_p").unionByName(
-            e.select(F.col("_p").alias("_c"), F.col("_c").alias("_p"))
-        )
-        m = nbrs.groupBy("_c").agg(
-            F.least(F.min("_p"), F.first("_c")).alias("_m")
-        )
+        nbr = F.coalesce(F.col("_nbr"), F.col("component"))
+        observed.append(Observation())
         return (
-            nbrs.join(m, "_c")
-            .filter(F.col("_p") > F.col("_c"))
-            .select(F.col("_p").alias("_c"), F.col("_m").alias("_p"))
-            .distinct()
+            labels.join(nbr_min, labels[id_col] == nbr_min["_s"], "left")
+            .select(
+                F.col(id_col),
+                F.least(F.col("component"), nbr).alias("component"),
+                (nbr < F.col("component")).alias("_changed"),
+            )
+            .observe(
+                observed[-1],
+                F.coalesce(
+                    F.sum(F.col("_changed").cast("long")), F.lit(0)
+                ).alias("n_changed"),
+            )
+            .drop("_changed")
         )
 
-    def small_star(e: DataFrame) -> DataFrame:
-        # e is already child>parent oriented; per child, link all its
-        # parents AND itself to the overall min parent
-        m = e.groupBy("_c").agg(F.min("_p").alias("_m"))
-        linked = (
-            e.join(m, "_c")
-            .filter(F.col("_p") != F.col("_m"))
-            .select(F.col("_p").alias("_c"), F.col("_m").alias("_p"))
+    with _pinned_partitions(edges.sparkSession, parts):
+        labels, _ = _iterate(
+            step,
+            labels,
+            max_iter,
+            converged=lambda _prev, _new: observed[-1].get["n_changed"] == 0,
+            name="connected_components",
         )
-        self_links = m.select(F.col("_c"), F.col("_m").alias("_p"))
-        return linked.unionByName(self_links).distinct()
-
-    for _ in range(max_iter):
-        nxt = small_star(large_star(star)).localCheckpoint()
-        # converged when the canonical edge set is a fixpoint; subtract is
-        # one extra shuffle per round — the price of a sound stopping rule
-        if nxt.subtract(star).count() == 0 and star.subtract(nxt).count() == 0:
-            star = nxt
-            break
-        star = nxt
-    else:
-        _warn_not_converged("star", max_iter)
-
-    labels = star.select(F.col("_c").alias(id_col), F.col("_p").alias("component"))
-    roots = vertices.select(id_col).join(
-        star.select(F.col("_c").alias(id_col)), id_col, "left_anti"
-    ).select(F.col(id_col), F.col(id_col).alias("component"))
-    return labels.unionByName(roots)
+    return labels
 
 
 def duplicate_clusters(
@@ -286,23 +256,15 @@ def pagerank_converged(
     damping_den: int = 20,
     scale: int = 1_000_000_000_000,
 ) -> tuple[DataFrame, int]:
-    """Convergence-gated twin of :func:`pagerank_fixed_point` (round-4
-    verdict stretch): identical exact BIGINT recursion, but the loop
-    stops as soon as ``max_node |pr' - pr| <= tol_fp`` (fixed-point
-    units, i.e. tol_fp/scale in rank mass) instead of running a fixed
-    count — so a 100x graph neither over-iterates past its stationary
-    point nor under-iterates before it. Returns ``(ranks, rounds_run)``.
+    """:func:`pagerank_fixed_point`'s recursion, stopped at the first
+    round where ``max_node |pr' - pr| <= tol_fp`` (fixed-point units,
+    i.e. tol_fp/scale of rank mass). Returns ``(ranks, rounds_run)``.
 
-    The gate costs one node-sized max-|delta| aggregate per round (old
-    and new ranks are co-partitioned on the node key, so the diff join
-    is exchange-free); because the arithmetic is exact integers, the
-    check is deterministic — no float-noise flapping around the
-    threshold. With ``tol_fp=0`` it stops exactly at the integer
-    fixpoint. A run that hits ``max_iter`` without converging warns,
-    same contract as connected_components."""
-    return _pagerank_loop(
-        edges, src, dst, max_iter, damping_num, damping_den, scale,
-        tol_fp=tol_fp,
+    The integer arithmetic makes the gate deterministic; ``tol_fp=0``
+    stops exactly at the integer fixpoint. Running out of ``max_iter``
+    warns."""
+    return _pagerank(
+        edges, src, dst, max_iter, damping_num, damping_den, scale, tol_fp
     )
 
 
@@ -314,73 +276,36 @@ def pagerank_fixed_point(
     damping_num: int = 17,
     damping_den: int = 20,
     scale: int = 1_000_000_000_000,
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """PageRank with a FIXED iteration count in pure BIGINT fixed-point —
     deterministic across engines and partition orders, so the result is
     hash-gateable (double-accumulated PR depends on partial-sum order).
 
-    All arithmetic is exact: ranks live in units of ``1/scale``, each
-    step is ``pr' = base + (damping_num * SUM(pr_in // deg)) DIV
-    damping_den`` with integer division at exactly the same points in
-    every engine. Precision loss from the floor divisions is identical
-    everywhere, bounded by iters * (deg truncation) — fine for ranking.
+    Ranks live in units of ``1/scale``; each step is ``pr' = base +
+    (damping_num * SUM(pr_in // deg)) DIV damping_den`` with integer
+    division at exactly the same points in every engine, so the floor
+    losses are identical everywhere.
 
-    Scale shape: the edge list (with its per-source degree attached) is
-    localCheckpoint-materialized, and the rank table lands every
-    ``ckpt_every`` rounds (plus the final round) — the kcore_decomposition
-    lineage-truncation cadence (guide §2.4). Without any landing every
-    round's LAZY plan re-derives the whole edge-generation subtree and
-    the join tree deepens exponentially (measured 14s -> 3.4s at sf0.1
-    for the co-purchase gate); landing EVERY round pays one eager
-    materialization job per round the fixed-count loop doesn't need
-    (r15: ckpt_every=3 measured 6.8 -> 5.2 s same-session min at sf0.1,
-    values bit-identical — un-landed rounds dedup through
-    ReusedExchange). Per round: one join of ranks to the pinned edges on
-    the source key and one sum keyed on the destination — 2 exchanges
-    over (node, long) pairs. ``iters`` is fixed (the
-    standard production choice: ~O(log n) rounds approximate the
-    stationary point well before convergence detection pays for
-    itself); for convergence-gated variants reuse the
-    connected_components loop skeleton.
-
-    Nodes are taken from the edge endpoints (dangling-free by
-    construction when the caller symmetrizes an undirected graph, as the
-    co-purchase query does); multi-edges are honored with multiplicity.
+    Nodes are taken from the edge endpoints (dangling-free when the
+    caller symmetrizes an undirected graph, as the co-purchase query
+    does); multi-edges count with multiplicity. Returns ``(node,
+    pagerank_fp)``.
     """
-    pr, _ = _pagerank_loop(
-        edges, src, dst, iters, damping_num, damping_den, scale,
-        tol_fp=None, ckpt_every=ckpt_every,
-    )
-    return pr
+    return _pagerank(
+        edges, src, dst, iters, damping_num, damping_den, scale, None
+    )[0]
 
 
-def _pagerank_loop(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    iters: int,
-    damping_num: int,
-    damping_den: int,
-    scale: int,
-    tol_fp: int | None,
-    ckpt_every: int = 1,
+def _pagerank(
+    edges: DataFrame, src: str, dst: str, iters: int, damping_num: int,
+    damping_den: int, scale: int, tol_fp: int | None,
 ) -> tuple[DataFrame, int]:
-    # Materialize the edge set ONCE (deg and the joined working set both
-    # derive from these blocks, not from a re-run of the caller's edge-
-    # generation subtree), then pin BOTH iteration inputs to one explicit
-    # hash partitioning sized to the edge count — the connected_components
-    # discipline: edges on the probe key and ranks on the node key at the
-    # SAME count make the per-round join exchange-free; each round's only
-    # shuffle is the destination-keyed sum.
+    # The edge set (with each source's degree) lands once, so no round
+    # re-runs the caller's edge generation. Degree is an aggregate +
+    # shuffle-hash join over one hash(src) partitioning, not a window: the
+    # window sorts the whole edge set (measured 6.0 of 6.6 s at sf0.1).
     spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    # Degree via aggregate + shuffle-hash join, NOT a window: the window
-    # form sorts the full edge set within partitions (the dominant cost
-    # of the whole operator — measured 6.0s of a 6.6s sf0.1 run on 2.4M
-    # edges); the aggregate is map-side combinable and both join sides
-    # share the hash(src) partitioning, so the attach is sort-free and
-    # exchange-free at any node cardinality (no broadcast assumption).
+    parts = _loop_parts(spark)
     edges_parted = edges.repartition(parts, src)
     degrees = edges_parted.groupBy(src).agg(
         F.count("*").cast("bigint").alias("_deg")
@@ -388,12 +313,8 @@ def _pagerank_loop(
     working = edges_parted.join(
         degrees.hint("shuffle_hash"), src
     ).localCheckpoint()
-    # node list + degrees straight off the materialized blocks; the
-    # groupBy's required partitioning is already satisfied (hash(src))
     deg = working.groupBy(src).agg(F.min("_deg").alias("_deg"))
-    # the 1-row node count rides a broadcast into EVERY round's rank
-    # rebuild — checkpoint it once so each round reads one cached row
-    # instead of re-aggregating the full edge set
+    # the one-row node count is broadcast into every round
     n_nodes = deg.agg(
         F.count("*").cast("bigint").alias("_n")
     ).localCheckpoint()
@@ -410,84 +331,51 @@ def _pagerank_loop(
         f"(CAST({(damping_den - damping_num) * scale} AS BIGINT) "
         f"DIV {damping_den}) DIV _n"
     )
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    rounds = 0
-    try:
-        for _i in range(iters):
-            # shuffle-hash hint: build a hash map of the node-sized rank
-            # table per partition instead of sort-merge — co-partitioned
-            # inputs make it exchange-free AND skip re-sorting the edge
-            # blocks every round (the dominant per-round cost otherwise)
-            contrib = working.join(
-                pr.hint("shuffle_hash"), working[src] == pr["node"]
-            ).select(
-                working[dst].alias("_to"),
-                F.expr("pr DIV _deg").alias("_c"),
-            )
-            sums = contrib.groupBy("_to").agg(
-                F.sum("_c").cast("bigint").alias("_s")
-            )
-            prev_pr = pr
-            pr = (
-                pr.join(sums, pr["node"] == sums["_to"], "left")
-                .crossJoin(F.broadcast(n_nodes))
-                .select(
-                    F.col("node"),
-                    (
-                        F.expr(base_expr)
-                        + F.expr(
-                            f"({damping_num} * coalesce(_s,"
-                            f" CAST(0 AS BIGINT))) DIV {damping_den}"
-                        )
+
+    def step(pr: DataFrame) -> DataFrame:
+        contrib = working.join(
+            pr.hint("shuffle_hash"), working[src] == pr["node"]
+        ).select(
+            working[dst].alias("_to"),
+            F.expr("pr DIV _deg").alias("_c"),
+        )
+        sums = contrib.groupBy("_to").agg(
+            F.sum("_c").cast("bigint").alias("_s")
+        )
+        return (
+            pr.join(sums, pr["node"] == sums["_to"], "left")
+            .crossJoin(F.broadcast(n_nodes))
+            .select(
+                F.col("node"),
+                (
+                    F.expr(base_expr)
+                    + F.expr(
+                        f"({damping_num} * coalesce(_s,"
+                        f" CAST(0 AS BIGINT))) DIV {damping_den}"
                     )
-                    .cast("bigint")
-                    .alias("pr"),
                 )
+                .cast("bigint")
+                .alias("pr"),
             )
-            rounds += 1
-            # Landing cadence (guide §2.4 lineage truncation, the kcore
-            # ckpt_every discipline): the fixed-point variant runs NO
-            # mid-loop action, so a per-round localCheckpoint pays one
-            # eager materialization job per round for nothing — land
-            # every ``ckpt_every`` rounds instead. The un-landed round's
-            # duplicated pr subtree dedups through ReusedExchange (pure
-            # SQL subplans canonicalize); checkpointing is semantics-
-            # free, values identical. The FINAL round always lands so
-            # the returned frame is materialized while the loop's
-            # shuffle-partition pin is still in force (the conf is
-            # restored in ``finally`` — an un-landed tail would execute
-            # later at the ambient conf). The convergence-gated variant
-            # (tol_fp set) keeps per-round landings: its delta probe is
-            # an action over BOTH pr and prev_pr every round.
-            if (
-                tol_fp is not None
-                or rounds % max(ckpt_every, 1) == 0
-                or rounds == iters
-            ):
-                pr = pr.localCheckpoint()
-            if tol_fp is not None:
-                # exact integer max-|delta| over co-partitioned ranks:
-                # exchange-free shuffle-hash join + scalar aggregate
-                delta = (
-                    prev_pr.withColumnRenamed("pr", "_pr_old")
-                    .join(pr.hint("shuffle_hash"), "node")
-                    .agg(F.max(F.abs(F.col("pr") - F.col("_pr_old"))))
-                    .collect()[0][0]  # driver-ok: one scalar per round
-                )
-                if delta is not None and delta <= tol_fp:
-                    break
-        else:
-            if tol_fp is not None:
-                warnings.warn(
-                    f"pagerank_converged: max_iter={iters} reached with "
-                    f"max |delta| still above tol_fp={tol_fp}; returning "
-                    "the un-converged ranks",
-                    stacklevel=3,
-                )
-    finally:
-        spark.conf.set(sp_key, prev_sp)
+        )
+
+    def converged(prev: DataFrame, new: DataFrame) -> bool:
+        delta = (
+            prev.withColumnRenamed("pr", "_pr_old")
+            .join(new.hint("shuffle_hash"), "node")
+            .agg(F.max(F.abs(F.col("pr") - F.col("_pr_old"))))
+            .collect()[0][0]  # driver-ok: one scalar per round
+        )
+        return delta is not None and delta <= tol_fp
+
+    with _pinned_partitions(spark, parts):
+        pr, rounds = _iterate(
+            step,
+            pr,
+            iters,
+            converged=None if tol_fp is None else converged,
+            name="pagerank_converged",
+        )
     return pr.select(F.col("node"), F.col("pr").alias("pagerank_fp")), rounds
 
 
@@ -605,60 +493,19 @@ def label_propagation(
 
     Returns ``(node, community)`` for every node with at least one edge.
 
-    Scale / r14 round shape (guide §2.4/§3.1, same as
-    kcore_decomposition): the per-round join is a hinted SHUFFLED-HASH
-    join — AQE otherwise broadcast-converts the node-sized label table
-    every round (a per-round driver collect + broadcast build) at
-    bench scale, and at 100 TB the label table cannot broadcast, so
-    the hinted shape is both the faster local one and the only
-    scale-honest one (and never sorts the edge side). The (node,
-    label) count and the argmax (max over struct(count, -label) —
-    never a per-node window) STACK on ONE explicit node-keyed
-    REPARTITION_BY_NUM exchange (hash(node) satisfies the (node, lab)
-    clustering) — was one (node, lab) exchange plus one (node)
-    exchange. ``localCheckpoint`` truncates lineage between rounds
-    (the connected_components discipline); the loop pins
-    ``spark.sql.shuffle.partitions`` to the parallelism-derived
-    ``parts``. Labels are node ids (longs); no text, no payloads in
-    any shuffle. A/B at sf0.1 (alternating in-session, results
-    bit-identical): 4.51 -> 3.39s / 5.01 -> 4.40s / 3.96 -> 2.89s
-    across three sessions; dropping a speculative edge-side
-    pre-repartition (localCheckpoint loses partitioning under AQE)
-    measured a further 6.57 -> 3.96s at the session median.
+    Per round: :func:`_neighbor_counts`, then the argmax as a combinable
+    max over struct(count, -label), never a window.
     """
     spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
-        und = (
-            _symmetrized(edges, src, dst)
-            .filter(F.col("_s") != F.col("_d"))
-            .distinct()
-            .localCheckpoint()
-        )
-        labels = (
-            und.select(F.col("_s").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lab"))
-            .localCheckpoint()
-        )
-        for _ in range(iters):
-            msgs = und.join(
-                labels.withColumnRenamed("node", "_s").hint("shuffle_hash"),
-                "_s",
-            ).select(F.col("_d").alias("node"), "lab")
-            # one node-keyed exchange serves BOTH aggregates below it
-            counts = (
-                msgs.repartition(parts, "node")
-                .groupBy("node", "lab")
-                .agg(F.count("*").cast("bigint").alias("c"))
-            )
-            # argmax (count DESC, label ASC) as a combinable max over
-            # struct(count, -label): ids are non-negative longs, so the
-            # negation order is exactly label-ascending on count ties
-            labels = (
+    parts = _loop_parts(spark)
+    with _pinned_partitions(spark, parts):
+        und = _undirected(edges, src, dst)
+
+        def step(labels: DataFrame) -> DataFrame:
+            counts = _neighbor_counts(und, labels, "lab", parts)
+            # ids are non-negative longs, so max(-label) on count ties
+            # picks the smallest label
+            return (
                 counts.groupBy("node")
                 .agg(
                     F.max(
@@ -666,11 +513,46 @@ def label_propagation(
                     ).alias("_m")
                 )
                 .select("node", (-F.col("_m._nl")).alias("lab"))
-                .localCheckpoint()
             )
-    finally:
-        spark.conf.set(sp_key, prev_sp)
+
+        labels = (
+            und.select(F.col("_s").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("lab"))
+        )
+        labels, _ = _iterate(step, labels, iters, name="label_propagation")
     return labels.select("node", F.col("lab").alias("community"))
+
+
+def _kcore(
+    edges: DataFrame, src: str, dst: str, rounds: int,
+    converged: _Probe | None = None, min_rounds: int = 1,
+) -> tuple[DataFrame, int]:
+    """Synchronous H-index rounds from each node's degree; returns
+    ``((node, coreness), rounds_run)``. Per round: the neighbors' (h, c)
+    histogram (:func:`_neighbor_counts`) folded by ``_HINDEX``."""
+    spark = edges.sparkSession
+    parts = _loop_parts(spark)
+    hindex = F.expr(_HINDEX)
+    with _pinned_partitions(spark, parts):
+        und = _undirected(edges, src, dst)
+
+        def step(vals: DataFrame) -> DataFrame:
+            hist = _neighbor_counts(und, vals, "h", parts)
+            return hist.groupBy("node").agg(hindex.alias("h"))
+
+        vals = und.groupBy(F.col("_s").alias("node")).agg(
+            F.count("*").cast("bigint").alias("h")
+        )
+        vals, rounds_run = _iterate(
+            step,
+            vals,
+            rounds,
+            converged=converged,
+            min_rounds=min_rounds,
+            name="kcore_converged (h-index)",
+        )
+    return vals.select("node", F.col("h").alias("coreness")), rounds_run
 
 
 def kcore_decomposition(
@@ -678,7 +560,6 @@ def kcore_decomposition(
     rounds: int = 6,
     src: str = "src",
     dst: str = "dst",
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """Coreness (k-core number) per node by synchronous H-index
     iteration — Lu, Zhou, Zhang & Stanley, "The H-index of a network
@@ -692,114 +573,18 @@ def kcore_decomposition(
     depth (tests/test_winnow_triangles.py measures the gap against an
     exact Batagelj-Zaversnik peel twin: at the default 6 rounds the
     bound is within +1 at sf0.001, +2 at sf0.1; exactness there needs
-    ~18 rounds). Callers needing exact coreness raise ``rounds``; the
-    default favors the fixed-cost screening shape — the standard
-    community-quality / graph-degeneracy filter next to closure,
-    PageRank, triangles and label propagation.
+    ~18 rounds). Callers needing exact coreness use
+    :func:`kcore_converged`.
 
-    Exactly ``rounds`` synchronous rounds run — no convergence test —
-    so the operator is a fixed, engine-replayable recurrence (the
-    label_propagation discipline): an unrolled SQL oracle replays it
-    bit-for-bit, and extra rounds past the fixpoint are stationary
-    (the H-index of converged values reproduces them).
+    Exactly ``rounds`` rounds run — no convergence test — so an
+    unrolled SQL oracle replays the recurrence bit-for-bit, and extra
+    rounds past the fixpoint are stationary.
 
     Returns ``(node, coreness)`` for every node with at least one edge
-    (coreness is a BIGINT — every step is integer-exact, hash-gateable).
-
-    Scale: per round, ONE shuffle join (values x edges on the source
-    id) + ONE map-side-combinable (node, value) count; the per-node
-    H-index folds over the (value, count) HISTOGRAM — sorted desc, the
-    running count tracks ``max(min(value, cum))``, which equals the
-    H-index at distinct-value group boundaries — as a single JVM-side
-    expression: no window, and the collected histogram is bounded by
-    the node's DISTINCT neighbor-value count, which the iteration
-    itself crushes toward the (tiny) coreness range after round one —
-    a hub's histogram is at most max-coreness entries, not its degree.
-
-    Unlike the convergence-checked loops (connected_components), the
-    fixed-round recurrence runs NO mid-loop action, so per-round
-    ``localCheckpoint`` would pay an eager materialization job per
-    round for nothing; lineage is instead truncated every
-    ``ckpt_every`` rounds — enough to keep the optimizer's plan depth
-    bounded while the whole recurrence executes as ~rounds/ckpt_every
-    jobs (measured at sf0.1: cold 16.3s with per-round landings vs
-    7-9.5s at every-3 in the same session positions; checkpointing is
-    semantics-free, values identical).
-
-    r14 round shape (guide §2.4/§3.1): (a) the per-round join carries a
-    ``shuffle_hash`` hint — without it AQE broadcast-converts the
-    node-sized value table every round at bench scale (a per-round
-    driver collect + broadcast build), and at 100 TB the value table
-    cannot broadcast at all, so the hinted shuffled-hash is both the
-    faster local shape and the only scale-honest one (and it never
-    sorts the edge side the way sort-merge would); (b) the message
-    aggregate is keyed to ``node`` ONLY via an explicit
-    REPARTITION_BY_NUM exchange — hash(node) satisfies the (node, h)
-    clustering, so histogram + H-index fold STACK on that single
-    exchange (was: one (node, h) exchange + one (node) exchange);
-    (c) the loop pins ``spark.sql.shuffle.partitions`` to the
-    parallelism-derived ``parts`` so low-core runs don't pay 32-way
-    task overhead per round — the pin is a SESSION-global conf
-    mutation (restored in ``finally``), so the loop assumes no other
-    query plans on the same session concurrently, and every round
-    (including the last — the final round always lands, r15) executes
-    under the pin. NOTE an explicit pre-partitioning of the
-    edge landing is NOT kept: ``localCheckpoint`` does not preserve
-    outputPartitioning under AQE (measured: the join re-exchanges a
-    repartition(parts, _s).localCheckpoint() edge side anyway), and
-    the persist()-pinned alternative that does preserve it measured
-    slower (deserialized cache reads; 5.0 -> 9.0s on the convergence
-    twin). A/B at sf0.1 (alternating in-session, results
-    bit-identical): 5.30 -> 4.80 / 6.26 -> 6.22 (this fixed-round
-    variant), 4.51 -> 3.39 / 3.96 -> 2.89 (label_propagation, same
-    round shape, where the shared exchange repeats 3x)."""
-    spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
-        und = (
-            _symmetrized(edges, src, dst)
-            .filter(F.col("_s") != F.col("_d"))
-            .distinct()
-            .localCheckpoint()
-        )
-        vals = und.groupBy(F.col("_s").alias("node")).agg(
-            F.count("*").cast("bigint").alias("h")
-        )
-        hindex = F.expr(
-            "aggregate(sort_array(collect_list(struct(h, c)), false), "
-            "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
-            "(acc, x) -> struct(acc.cum + x.c, "
-            "greatest(acc.best, least(x.h, acc.cum + x.c))), "
-            "acc -> acc.best)"
-        )
-        for r in range(rounds):
-            msgs = und.join(
-                vals.withColumnRenamed("node", "_s").hint("shuffle_hash"),
-                "_s",
-            ).select(F.col("_d").alias("node"), "h")
-            # one node-keyed exchange serves BOTH aggregates below it
-            hist = (
-                msgs.repartition(parts, "node")
-                .groupBy("node", "h")
-                .agg(F.count("*").cast("bigint").alias("c"))
-            )
-            vals = hist.groupBy("node").agg(hindex.alias("h"))
-            # The FINAL round lands too (r15, r14 ADVICE): the returned
-            # frame must materialize while the loop's shuffle-partition
-            # pin is still in force — an un-landed tail would execute
-            # after ``finally`` restores the conf, running the last
-            # rounds at the ambient partition count the pin exists to
-            # avoid (the pagerank_fixed_point discipline).
-            if ckpt_every and (
-                (r + 1) % ckpt_every == 0 or r + 1 == rounds
-            ):
-                vals = vals.localCheckpoint()
-    finally:
-        spark.conf.set(sp_key, prev_sp)
-    return vals.select("node", F.col("h").alias("coreness"))
+    (BIGINT, hash-gateable). After round one a hub's histogram is
+    bounded by the coreness range, not its degree.
+    """
+    return _kcore(edges, src, dst, rounds)[0]
 
 
 def kcore_converged(
@@ -808,98 +593,32 @@ def kcore_converged(
     dst: str = "dst",
     max_rounds: int = 64,
     min_rounds: int = 1,
-    ckpt_every: int = 3,
 ) -> "tuple[DataFrame, int]":
-    """Convergence-EXACT twin of :func:`kcore_decomposition` (the
-    :func:`pagerank_converged` discipline, r13 verdict stretch #6):
-    the same synchronous H-index recurrence (Lu et al., Nature
-    Communications 2016), but the loop stops the first round NO node's
-    value changes — and because the per-node sequence is monotone
-    decreasing over integers, a stationary round IS the fixpoint, and
-    the fixpoint IS the coreness (not an upper bound). Returns
-    ``(frame, rounds_run)`` where ``rounds_run`` counts executed
-    rounds including the final stationary one; exactness is pinned
-    against the Batagelj-Zaversnik peel in
-    tests/test_winnow_triangles.py.
+    """:func:`kcore_decomposition`'s recurrence, stopped at the first
+    round where no node's value changes. The per-node sequence is a
+    monotone decreasing integer sequence, so that stationary round IS
+    the fixpoint and the result is the exact coreness, not a bound.
+    Returns ``(frame, rounds_run)``, ``rounds_run`` counting the
+    stationary round. Running out of ``max_rounds`` warns.
 
-    The convergence gate is deterministic — exact BIGINT values, no
-    float flapping — and costs one co-partitioned anti-equality probe
-    per round (both value tables come off ``groupBy(node)`` at the
-    same shuffle partitioning; ``limit(1)`` lets the probe
-    short-circuit at the first changed node). Unlike the fixed-round
-    variant, a probed round runs an ACTION, so its values are
-    ``localCheckpoint``-landed (the connected_components shape) — the
-    price of knowing when to stop; callers screening at a fixed budget
-    keep :func:`kcore_decomposition`. A run that hits ``max_rounds``
-    without converging warns, same contract as connected_components.
+    The probe is a ``limit(1)`` anti-equality join of the two rounds'
+    values. ``min_rounds``: rounds below it are not probed — for
+    callers that know a lower bound on the depth. Values are identical
+    either way (extra rounds past the fixpoint are stationary); a graph
+    converging below ``min_rounds`` reports the first probed stationary
+    round."""
 
-    ``min_rounds``: rounds below it skip the probe and run in the
-    CHEAP fixed-round shape (no action, lineage truncated every
-    ``ckpt_every`` rounds) — the convergence-tax amortization for
-    callers that KNOW a lower bound on the depth (a graph family whose
-    measured depth never dips below k pays k-1 landings for nothing).
-    Values are identical either way — skipping a probe can only run
-    extra rounds, and extra rounds past the fixpoint are stationary;
-    if the graph does converge below ``min_rounds``, ``rounds_run``
-    reports the first PROBED stationary round (an upper bound on the
-    true depth), which the caller accepted by raising ``min_rounds``.
-
-    Scale shape per round: identical to the fixed-round variant (ONE
-    shuffle join + ONE combinable histogram + the JVM-side H-index
-    fold), plus the node-sized change probe on probed rounds."""
-    und = (
-        _symmetrized(edges, src, dst)
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    vals = (
-        und.groupBy(F.col("_s").alias("node"))
-        .agg(F.count("*").cast("bigint").alias("h"))
-        .localCheckpoint()
-    )
-    hindex = F.expr(
-        "aggregate(sort_array(collect_list(struct(h, c)), false), "
-        "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
-        "(acc, x) -> struct(acc.cum + x.c, "
-        "greatest(acc.best, least(x.h, acc.cum + x.c))), "
-        "acc -> acc.best)"
-    )
-    rounds_run = 0
-    for _ in range(max_rounds):
-        msgs = und.join(
-            vals.withColumnRenamed("node", "_s"), "_s"
-        ).select(F.col("_d").alias("node"), "h")
-        hist = msgs.groupBy("node", "h").agg(
-            F.count("*").cast("bigint").alias("c")
-        )
-        new_vals = hist.groupBy("node").agg(hindex.alias("h"))
-        rounds_run += 1
-        if rounds_run < min_rounds:
-            # probe-free prefix: fixed-round shape. The LAST skip round
-            # still lands so the first probe joins checkpointed inputs
-            # instead of re-deriving the prefix lineage.
-            if rounds_run == min_rounds - 1 or (
-                ckpt_every and rounds_run % ckpt_every == 0
-            ):
-                new_vals = new_vals.localCheckpoint()
-            vals = new_vals
-            continue
-        new_vals = new_vals.localCheckpoint()
-        changed = (
-            new_vals.withColumnRenamed("h", "_hn")
-            .join(vals, "node")
+    def unchanged(prev: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.withColumnRenamed("h", "_hn")
+            .join(prev, "node")
             .filter(F.col("_hn") != F.col("h"))
             .limit(1)
             .count()
+            == 0
         )
-        vals = new_vals
-        if changed == 0:
-            return vals.select("node", F.col("h").alias("coreness")), (
-                rounds_run
-            )
-    _warn_not_converged("h-index", max_rounds)
-    return vals.select("node", F.col("h").alias("coreness")), rounds_run
+
+    return _kcore(edges, src, dst, max_rounds, unchanged, min_rounds)
 
 
 def bfs_distances(
@@ -909,55 +628,44 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     id_col: str = "node",
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """Multi-source BFS hop distances: for every node reachable from
     ``sources`` within ``rounds`` hops, the exact minimum hop count —
     the neighborhood/reachability primitive (influence radius, blast-
-    radius audits, seed-expansion sampling) next to closure, PageRank,
-    triangles, LPA and k-core.
+    radius audits, seed-expansion sampling).
 
-    Exactly ``rounds`` synchronous frontier expansions run (the
-    label_propagation / kcore_decomposition fixed-round discipline —
-    an unrolled SQL oracle replays the recurrence bit-for-bit, and a
-    node at distance d is final once d <= rounds: later rounds can
-    only re-offer larger values, which the min rejects). Nodes farther
-    than ``rounds`` are absent from the result — the contract is
-    "distances within the horizon", the shape reachability audits
-    actually query.
+    Exactly ``rounds`` synchronous frontier expansions run, so an
+    unrolled SQL oracle replays the recurrence bit-for-bit; a node at
+    distance d is final once d <= rounds (later rounds only offer
+    larger values, which the min rejects). Nodes farther than
+    ``rounds`` are absent from the result.
 
     Returns ``(node, hops)`` — BIGINT, hash-gateable.
 
-    Scale: per round ONE shuffle join (current distances x edges on
-    the source endpoint) + ONE map-side-combinable min per node;
-    distances carry (long, long) pairs only. The frontier is not
-    delta-tracked (a production BSP engine would expand only last
-    round's new nodes); at fixed small ``rounds`` the full-table join
-    is at most ``rounds`` x the delta version's work and keeps the
-    recurrence engine-replayable. Lineage truncates every
-    ``ckpt_every`` rounds (no mid-loop action — the kcore rationale).
+    Per round one join (distances x edges on the source endpoint) + one
+    combinable min per node. The frontier is not delta-tracked: at small
+    fixed ``rounds`` the full-table join is at most ``rounds`` x the
+    delta version's work and keeps the recurrence engine-replayable.
     """
-    und = (
-        _symmetrized(edges, src, dst)
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    dist = sources.select(
-        F.col(id_col).alias("node"), F.lit(0).cast("bigint").alias("hops")
-    ).distinct()
-    for r in range(rounds):
-        offers = und.join(
-            dist.withColumnRenamed("node", "_s"), "_s"
-        ).select(
-            F.col("_d").alias("node"),
-            (F.col("hops") + F.lit(1).cast("bigint")).alias("hops"),
-        )
-        dist = (
-            dist.unionByName(offers)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-        )
-        if ckpt_every and (r + 1) % ckpt_every == 0 and r + 1 < rounds:
-            dist = dist.localCheckpoint()
+    spark = edges.sparkSession
+    with _pinned_partitions(spark, _loop_parts(spark)):
+        und = _undirected(edges, src, dst)
+
+        def step(dist: DataFrame) -> DataFrame:
+            offers = und.join(
+                dist.withColumnRenamed("node", "_s"), "_s"
+            ).select(
+                F.col("_d").alias("node"),
+                (F.col("hops") + F.lit(1).cast("bigint")).alias("hops"),
+            )
+            return (
+                dist.unionByName(offers)
+                .groupBy("node")
+                .agg(F.min("hops").alias("hops"))
+            )
+
+        dist = sources.select(
+            F.col(id_col).alias("node"), F.lit(0).cast("bigint").alias("hops")
+        ).distinct()
+        dist, _ = _iterate(step, dist, rounds, name="bfs_distances")
     return dist

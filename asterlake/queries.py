@@ -12885,241 +12885,70 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   touches or declares (freeze AFTER the round's last operator
 #   commit, via rotation.suggest_front).
 
-# No exemptions this round: every query rotation.queries_touched()
-# flags sits inside the front below. (The r13 exemption entries were
-# scoped to diffs between the r12 and r13 driver commits — invisible
-# to the current freeze base — and are dropped rather than left to
-# mask a future real touch.)
-_R15_OPT_EXEMPT_NOTE = (
-    "r15 OPTIMIZATION round: execution-plan / runtime-conf / driver-"
-    "overhead change only; results bit-identical - verified by the full "
-    "DuckDB parity sweep at the optimized tree plus per-change "
-    "same-session sorted-row A/B (OPTIMIZATION_r15.md)"
-)
 # Exemptions are ROUND-SCOPED (r14 ADVICE): each batch is pinned to the
 # scoring-freeze base it was justified against, and test_rotation fails
 # the moment the driver's next CORRECTNESS commit advances the base —
 # so a stale exemption can never silently excuse a FUTURE semantic edit.
-# (The 153 r14 entries were dropped at r15 round-start for exactly that
-# reason: their justifying diffs are invisible to the current base.)
-_EXEMPT_FREEZE_BASE = "7f9ef5e9ab11eeb02eca9e35ae3f62174c69249c"
-_AUTO_PROMOTE_EXEMPT: dict[str, str] = dict.fromkeys(
-    [
-    "flagship_revenue_by_nation",
-    "q_ann_adc_multi",
+# None at this base: every touched query sits inside the front below.
+_EXEMPT_FREEZE_BASE = "d0a099fc7f87013efa2a3cf4626b4f3ef6fdc73e"
+_AUTO_PROMOTE_EXEMPT: dict[str, str] = {}
+
+# Scoring front (exactly 50): rotation.suggest_front(list(QUERIES)) at
+# the last operator edit — the touched queries (the graph-loop driver
+# refactor in operators/graph.py and every query reaching it), then the
+# longest-unverified rows.
+_FRONT = [
+    "q_pagerank_copurchase",
+    "q_ann_srp_multiprobe",
+    "q_dedup_semantic",
+    "q_dedup_semantic_incremental",
+    "q_golden_record",
+    "q_graph_triangles",
+    "q_label_propagation",
+    "q_linkage_eval",
+    "q_record_linkage",
+    "q_split_leakage_safe",
+    "q_stream_linkage",
     "q_ann_ivf_assign",
     "q_ann_ivf_search",
     "q_ann_opq_search",
-    "q_ann_pq_search",
     "q_ann_srp_buckets",
-    "q_ann_srp_multiprobe",
-    "q_array_agg_sorted",
-    "q_array_functions",
-    "q_asof_click_error",
-    "q_auc_exact",
-    "q_bfs_distances",
-    "q_bloom_semi_join",
-    "q_bm25_search",
-    "q_bpe_segment",
-    "q_cdc_apply",
-    "q_clustering_pair_metrics",
-    "q_cms_frequencies",
-    "q_cohens_kappa",
-    "q_cohort_retention",
-    "q_collocations_pmi",
-    "q_conditional_agg",
-    "q_corpus_survivors",
-    "q_correlated_subqueries",
-    "q_count_distinct",
-    "q_cube_revenue",
-    "q_date_arithmetic",
-    "q_decontaminate",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_latest_order",
-    "q_dedup_minhash_lsh",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_semantic",
-    "q_dedup_semantic_incremental",
-    "q_dedup_simhash_pairs",
-    "q_dedup_substrings_incremental",
-    "q_dedup_winnow",
-    "q_dedup_winnow_incremental",
-    "q_dim_date",
-    "q_dim_segment",
-    "q_drift_numeric",
-    "q_drift_tvd",
     "q_embedding_block_neighbors",
     "q_embedding_pca",
-    "q_embedding_srp_neighbors",
-    "q_ewma_value",
-    "q_fact_star_join",
-    "q_filter_predicates",
-    "q_forget_cascade",
-    "q_full_outer_join",
-    "q_funnel_conversion",
-    "q_fuzzy_name_pairs",
-    "q_gapfill_locf",
-    "q_golden_record",
-    "q_graph_triangles",
-    "q_grouped_map_deltas",
-    "q_grouping_sets",
-    "q_histogram_prices",
-    "q_hybrid_search",
-    "q_incremental_agg_merge",
-    "q_join_anti",
-    "q_join_semi",
-    "q_json_extract",
-    "q_k_anonymity",
-    "q_k_anonymous_release",
     "q_kcore_decompose",
-    "q_kll_quantile_rollup",
-    "q_l_diversity",
-    "q_label_propagation",
-    "q_linkage_eval",
-    "q_min_cost_supplier",
-    "q_minhash_jaccard_estimate",
-    "q_mixture_apply",
-    "q_mixture_temperature",
-    "q_mixture_weights",
-    "q_monthly_revenue",
-    "q_normalize_text",
-    "q_ohlc_bars",
-    "q_pack_manifest",
-    "q_pack_sequences",
-    "q_pagerank_copurchase",
-    "q_percentiles_exact",
-    "q_pivot_status",
-    "q_posexplode_tokens",
-    "q_pricing_summary",
-    "q_projection_arithmetic",
-    "q_quality_ensemble",
-    "q_quality_gate_text",
-    "q_quality_logistic",
-    "q_quarantine_expectations",
-    "q_quota_sample",
-    "q_range_join_clicks_before_error",
-    "q_range_layout_stats",
-    "q_record_linkage",
-    "q_recursive_month_spine",
-    "q_rollup_pricing",
+    "q_ann_adc_multi",
+    "q_ann_pq_search",
+    "q_bfs_distances",
+    "q_corpus_survivors",
+    "q_dedup_clusters",
+    "q_embedding_srp_neighbors",
+    "q_hybrid_search",
     "q_rrf_fuse",
-    "q_salted_join_top_customers",
-    "q_sample_stratified",
-    "q_scalar_functions",
-    "q_scd2_intervals",
-    "q_schema_drift_union",
-    "q_scrub_substrings",
-    "q_segment_quality_scrub",
-    "q_session_window",
-    "q_sessionization",
-    "q_set_ops",
-    "q_simhash_fingerprint",
-    "q_sketch_overlap",
-    "q_sketch_rollup_merge",
-    "q_skew_report",
-    "q_small_quantity_revenue",
-    "q_snapshot_diff",
+    "q_ann_int8_topk",
+    "q_ann_ivfpq_search",
+    "q_ann_topk_bruteforce",
+    "q_dedup_survivors",
+    "q_embedding_dup_clusters",
+    "q_embedding_normalize",
+    "q_kcore_exact",
+    "q_kmeans_step",
+    "q_media_mp4_meta",
+    "q_mixture_apply",
+    "q_mixture_weights",
+    "q_pack_sequences",
+    "q_quality_ensemble",
+    "q_recursive_month_spine",
     "q_snapshot_scan_bloom",
-    "q_snapshot_scan_pruned",
-    "q_split_assign",
-    "q_split_leakage_safe",
-    "q_stream_frequent",
-    "q_stream_linkage",
-    "q_stream_static_join",
-    "q_string_functions",
-    "q_table_profile",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_quality",
-    "q_text_redact",
-    "q_text_vocab_topk",
-    "q_theta_set_ops",
-    "q_top3_orders_per_segment",
-    "q_topk_orders",
-    "q_training_mix",
-    "q_udaf_iqr",
-    "q_udf_vector_norm",
     "q_unigram_seed_vocab",
     "q_unigram_segment",
-    "q_variant_extract",
-    "q_weighted_sample",
     "q_window_event_gaps",
     "q_window_frames",
     "q_window_navigation",
     "q_window_range_frames",
-    "q_winnow_fingerprints",
-    "q_wordpiece_segment",
-    "q_zorder_stats",
-    ],
-    _R15_OPT_EXEMPT_NOTE,
-)
-
-# Round-15 front (exactly 50), re-frozen AFTER the round's last
-# operator commit and verified equal to the mechanical derivation
-# (rotation.suggest_front over the declared set with THIS round's
-# justified exemption set — checked at freeze time: suggested == this
-# block, element for element). No new queries this round; the 48
-# touched-but-front rows stay (the driver re-verifies that many of the
-# round's bit-identical optimization touches directly), and the two
-# untouched r14-green rows the budget frees (q_phash_near_dup,
-# q_stream_quarantine — both scored green in CORRECTNESS_r14) hand
-# their slots to the two OLDEST rows in rotation, the last r10-scored
-# media decoders (q_media_decode_real, q_media_gif_anim).
-_R15_FRONT = [
-    "q_ann_int8_topk",
-    "q_ann_ivfpq_search",
-    "q_ann_topk_bruteforce",
-    "q_anomaly_outliers",
-    "q_bigram_greedy_decode",
-    "q_bigram_loglik",
-    "q_cdc_shared_chunks",
-    "q_chunk_documents",
-    "q_cms_join_size",
-    "q_collocations_lift",
-    "q_compression_signal",
-    "q_contamination_scores",
-    "q_curation_pipeline",
-    "q_decayed_engagement",
-    "q_dedup_containment",
-    "q_dedup_incremental",
-    "q_dedup_ngram_prefix",
-    "q_dedup_normalized",
-    "q_dedup_spans",
-    "q_dedup_substrings",
-    "q_dedup_survivors",
-    "q_denylist_scan",
-    "q_doc_rarity",
-    "q_domain_caps",
-    "q_dsir_select",
-    "q_embedding_centroids",
-    "q_embedding_dup_clusters",
-    "q_embedding_normalize",
-    "q_frequent_tokens",
-    "q_histogram_equidepth",
-    "q_kcore_exact",
-    "q_kmeans_step",
-    "q_ngram_overlap_eval",
-    "q_pii_scan",
-    "q_set_ops_all",
-    "q_shipping_priority",
-    "q_sketch_distinct",
-    "q_stream_cdc_apply",
-    "q_table_checksum",
-    "q_text_repetition",
-    "q_tfidf_top_terms",
-    "q_theta_similarity_join",
-    "q_trimmed_stats",
-    "q_twap_value",
-    "q_udtf_sentences",
-    "q_unpivot_measures",
-    "q_waiting_supplier_orders",
-    "q_weighted_median",
-    "q_media_decode_real",
-    "q_media_gif_anim",
+    "q_dedup_substrings_incremental",
+    "q_dedup_winnow",
+    "q_dedup_winnow_incremental",
 ]
-_FRONT = _R15_FRONT
-
 
 
 assert set(_FRONT) <= set(QUERIES), sorted(set(_FRONT) - set(QUERIES))

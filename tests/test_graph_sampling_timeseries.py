@@ -50,24 +50,19 @@ def test_connected_components_edge_direction_irrelevant(spark):
     assert a == b == [(1, 1), (2, 1), (3, 1)]
 
 
-def test_star_method_matches_propagation_on_long_chain(spark):
-    # 64-vertex path: diameter 63 — worst case for propagation, the
-    # O(log^2 n) large-star/small-star variant must agree exactly
+def test_propagation_labels_long_chain_within_max_iter(spark):
+    # 64-vertex path: diameter 63 — worst case for propagation, which
+    # needs 63 rounds here (the default max_iter=25 would truncate)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "src long, dst long"
     )
-    star = sorted(
-        map(tuple, connected_components(edges, method="star").collect())
-    )
-    # propagation is diameter-bound: needs 63 rounds here (the default
-    # max_iter=25 would truncate — exactly the case method="star" is for)
     prop = sorted(
         map(tuple, connected_components(edges, max_iter=70).collect())
     )
-    assert star == prop == [(i, 0) for i in range(64)]
+    assert prop == [(i, 0) for i in range(64)]
 
 
-def test_star_method_matches_propagation_random_graph(spark):
+def test_propagation_labels_every_vertex_of_random_graph(spark):
     # deterministic pseudo-random graph: several components + singletons
     import random
 
@@ -79,12 +74,14 @@ def test_star_method_matches_propagation_random_graph(spark):
     edges = [(a, b) for a, b in edges if a != b]
     edf = spark.createDataFrame(edges, "src long, dst long")
     vdf = spark.createDataFrame([(v,) for v in range(n)], "id long")
-    star = sorted(
-        map(tuple, connected_components(edf, vdf, method="star").collect())
-    )
     prop = sorted(map(tuple, connected_components(edf, vdf).collect()))
-    assert star == prop
-    assert len(star) == n
+    assert [v for v, _ in prop] == list(range(n))
+    # each label is the min id reachable from the vertex
+    comp = list(range(n))
+    for _ in range(n):
+        for a, b in edges:
+            comp[a] = comp[b] = min(comp[a], comp[b])
+    assert prop == list(enumerate(comp))
 
 
 def test_duplicate_clusters_transitive(spark):

@@ -218,6 +218,39 @@ def test_no_driver_side_actions_in_operator_code():
     assert pragmas <= 15, f"too many driver-ok pragmas: {pragmas}"
 
 
+def test_graph_conf_writes_only_in_the_partition_pin():
+    """operators/graph.py changes session conf in exactly one place,
+    ``_pinned_partitions`` (which restores it in a ``finally``): a loop
+    that pins ``spark.sql.shuffle.partitions`` on its own fails here."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parents[1] / "asterlake" / (
+        "operators/graph.py"
+    )
+    tree = ast.parse(src.read_text())
+
+    def conf_sets(node):
+        return [
+            n.lineno
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "set"
+            and isinstance(n.func.value, ast.Attribute)
+            and n.func.value.attr == "conf"
+        ]
+
+    pin = [
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_pinned_partitions"
+    ]
+    assert len(pin) == 1
+    outside = sorted(set(conf_sets(tree)) - set(conf_sets(pin[0])))
+    assert not outside, f"spark.conf.set outside _pinned_partitions: {outside}"
+    assert conf_sets(pin[0])
+
+
 def test_srp_blocked_neighbors_no_quadratic_shape(spark):
     """q_embedding_srp_neighbors: candidate generation must be an equi-join
     on the SRP bucket key (hash/sort-merge exchange on _blk), never a

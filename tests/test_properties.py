@@ -1356,13 +1356,10 @@ def test_interleave_bits_matches_python_morton(spark, pairs, bits):
         max_size=30,
     ),
     extra_verts=st.lists(st.integers(0, 15), min_size=0, max_size=6),
-    method=st.sampled_from(["propagation", "star"]),
 )
 @_SETTINGS
-def test_connected_components_matches_union_find(
-    spark, edges, extra_verts, method
-):
-    """Differential for both CC methods vs a Python union-find with
+def test_connected_components_matches_union_find(spark, edges, extra_verts):
+    """Differential for connected components vs a Python union-find with
     min-label components: random multigraphs with self-loops, repeated
     edges, and isolated vertices supplied via the vertices frame must
     all land on component = min reachable id."""
@@ -1379,7 +1376,7 @@ def test_connected_components_matches_union_find(
     vdf = spark.createDataFrame([(v,) for v in vids], "id int")
     got = {
         r.id: r.component
-        for r in connected_components(edf, vdf, method=method).collect()
+        for r in connected_components(edf, vdf).collect()
     }
     parent = {v: v for v in vids}
 

@@ -365,41 +365,32 @@ def test_percentile_call_state_is_released_by_next_call(spark, lineitem):
         release_percentile_state,
     )
 
-    def n_persistent() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persistent_ids() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in rdds.keySet()}
 
+    # Compare registry ids, not the global count: other tests' dead
+    # cache/checkpoint blocks are unregistered by the asynchronous
+    # ContextCleaner, which can shrink the count at any moment.
     release_percentile_state()  # drop leftovers from earlier tests
-    # Quiesce the ASYNC ContextCleaner before baselining: other tests'
-    # dead cache/checkpoint blocks stay registered until a JVM GC, and
-    # one firing MID-TEST shrinks the registry underneath the equality
-    # assertions below (observed as a session-composition flake in the
-    # r14 tier split — the count is global, not percentile-owned).
-    # Force the GC now and poll until the registry size holds still.
-    import gc
-    import time
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    prev = -1
-    for _ in range(20):
-        cur = n_persistent()
-        if cur == prev:
-            break
-        prev = cur
-        time.sleep(0.2)
-    base = n_persistent()
-    exact_percentiles(
-        lineitem, ["l_returnflag"], "l_extendedprice", [0.5]
-    ).collect()
-    after_one = n_persistent()
-    assert after_one > base  # counts + offsets are live for the output
-    exact_percentiles(
-        lineitem, ["l_returnflag"], "l_quantity", [0.25, 0.9]
-    ).collect()
-    # the second call released the first call's frames: no growth
-    assert n_persistent() == after_one
-    release_percentile_state()
-    assert n_persistent() == base
+    try:
+        base = persistent_ids()
+        exact_percentiles(
+            lineitem, ["l_returnflag"], "l_extendedprice", [0.5]
+        ).collect()
+        first = persistent_ids() - base
+        assert first  # counts + offsets are live for the output
+        exact_percentiles(
+            lineitem, ["l_returnflag"], "l_quantity", [0.25, 0.9]
+        ).collect()
+        # the second call released the first call's frames: no growth
+        second = persistent_ids() - base
+        assert not first & second
+        assert len(second) == len(first)
+        release_percentile_state()
+        assert not persistent_ids() - base
+    finally:
+        release_percentile_state()
 
 
 def test_memoized_counts_survive_the_release_cycle(spark, lineitem):

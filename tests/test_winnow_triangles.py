@@ -530,41 +530,125 @@ def test_kcore_converged_min_rounds_same_values(spark):
     assert r_skip >= max(r_base, 6)
 
 
-def test_graph_loop_conf_restored_and_values_conf_independent(spark):
-    """r14 round shape: kcore_decomposition and label_propagation pin
-    spark.sql.shuffle.partitions to a parallelism-derived count for the
-    loop (so low-core bench runs don't pay 32-way task overhead per
-    round) — the pin must RESTORE the session conf afterwards, and the
-    returned values must be identical under any ambient conf (the
-    repartition/shuffle-hash round shape is semantics-free)."""
-    from asterlake.operators.graph import (
-        kcore_decomposition,
-        label_propagation,
-    )
+def _loop_rows(op, df):
+    """One graph loop's output on ``df`` as a set of row tuples."""
+    from asterlake.operators import graph
 
+    if op == "kcore_converged":
+        out = graph.kcore_converged(df)[0]
+    elif op == "bfs_distances":
+        seeds = df.sparkSession.createDataFrame([(0,), (5,)], "node long")
+        out = graph.bfs_distances(df, seeds)
+    else:
+        out = getattr(graph, op)(df)
+    return {tuple(r) for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "kcore_decomposition",
+        "label_propagation",
+        "connected_components",
+        "pagerank_fixed_point",
+        "kcore_converged",
+        "bfs_distances",
+    ],
+)
+def test_graph_loop_conf_restored_and_values_conf_independent(spark, op):
+    """Every graph loop pins spark.sql.shuffle.partitions while it runs:
+    the pin must RESTORE the session conf afterwards, and the returned
+    values must be identical under any ambient conf."""
     edges = [(i % 17, (i * 5 + 2) % 17) for i in range(60)]
     df = spark.createDataFrame(edges, "src long, dst long")
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "7")
-        kc7 = {(r.node, r.coreness) for r in kcore_decomposition(df).collect()}
-        lp7 = {
-            (r.node, r.community) for r in label_propagation(df).collect()
-        }
+        at7 = _loop_rows(op, df)
         assert spark.conf.get(key) == "7", "loop must restore the conf"
         spark.conf.set(key, "32")
-        kc32 = {
-            (r.node, r.coreness) for r in kcore_decomposition(df).collect()
-        }
-        lp32 = {
-            (r.node, r.community) for r in label_propagation(df).collect()
-        }
+        at32 = _loop_rows(op, df)
         assert spark.conf.get(key) == "32"
-        assert kc7 == kc32
-        assert lp7 == lp32
+        assert at7 == at32 and at7
     finally:
         spark.conf.set(key, prev)
+
+
+def test_pinned_partitions_restores_conf_when_step_raises(spark):
+    from asterlake.operators.graph import _iterate, _pinned_partitions
+
+    def boom(state):
+        raise RuntimeError("step failed")
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with pytest.raises(RuntimeError, match="step failed"):
+        with _pinned_partitions(spark, 5):
+            assert spark.conf.get(key) == "5"
+            _iterate(boom, spark.range(1), 3)
+    assert spark.conf.get(key) == prev
+
+
+class _Counted:
+    """A stand-in loop state: its round number plus a shared log of the
+    rounds that were landed (localCheckpoint-ed)."""
+
+    def __init__(self, r, landed):
+        self.r, self.landed = r, landed
+
+    def localCheckpoint(self):
+        self.landed.append(self.r)
+        return self
+
+
+def _counting_step(state):
+    return _Counted(state.r + 1, state.landed)
+
+
+def test_iterate_landing_rule_and_convergence_warning():
+    import warnings
+
+    from asterlake.operators.graph import _iterate
+
+    # fixed rounds: every 3rd round and the final round land
+    state, n = _iterate(_counting_step, _Counted(0, []), 5)
+    assert (state.r, n, state.landed) == (5, 5, [3, 5])
+
+    # gated: every probed round lands; stops at the first true probe
+    probes = []
+
+    def at_4(prev, new):
+        probes.append((prev.r, new.r))
+        return new.r == 4
+
+    state, n = _iterate(_counting_step, _Counted(0, []), 10, converged=at_4)
+    assert (state.r, n, state.landed) == (4, 4, [1, 2, 3, 4])
+    assert probes == [(0, 1), (1, 2), (2, 3), (3, 4)]
+
+    # min_rounds: no probe before it; the round before the first probe
+    # lands so the probe compares two landed states
+    probes.clear()
+    state, n = _iterate(
+        _counting_step, _Counted(0, []), 10, converged=at_4, min_rounds=3
+    )
+    assert (n, state.landed) == (4, [2, 3, 4])
+    assert probes == [(2, 3), (3, 4)]
+
+    # running out of rounds warns exactly once
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        state, n = _iterate(
+            _counting_step,
+            _Counted(0, []),
+            3,
+            converged=lambda prev, new: False,
+            name="op_x",
+        )
+    assert n == 3 and state.r == 3
+    assert len(w) == 1 and w[0].category is UserWarning
+    assert "op_x" in str(w[0].message)
+    assert "max_iter=3 reached WITHOUT converging" in str(w[0].message)
 
 
 def test_kcore_converged_warns_on_max_rounds(spark):
